@@ -48,27 +48,6 @@ def exact_dedup(df: DataFrame, content_col: str = "text",
     return withh.join(first_key, ["content_sha", id_col], "left_semi")
 
 
-def anti_join_seen(df: DataFrame, seen: DataFrame, hash_col: Column,
-                   kind: str, broadcast: bool | None = None) -> DataFrame:
-    """J2/F7: drop rows whose hash is registered in seen_hashes (the
-    reference's dedup-gate, deduplicator.py:114-141).
-
-    `broadcast`: the caller knows which regime it is in — True forces a
-    broadcast hint (small registry), False forces shuffle (at 10^12 scale
-    the seen table is bucketed by hash so the anti-join is shuffle-free
-    anyway), None (default) leaves the decision to AQE /
-    autoBroadcastJoinThreshold. No driver-side count() fires during plan
-    construction in any mode."""
-    s = seen.where(F.col("kind") == kind).select(F.col("hash").alias("__h"))
-    if broadcast:
-        s = F.broadcast(s)
-    return (
-        df.withColumn("__h", hash_col)
-        .join(s, "__h", "left_anti")
-        .drop("__h")
-    )
-
-
 def register_hashes(seen_path: str, new_hashes: DataFrame) -> None:
     """D6: insert-if-new registration (deduplicator.py:143-161) — append the
     batch's hashes to the seen_hashes table. At 10^12 scale this is an
@@ -227,8 +206,20 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     struct array in memory before the Generate copies it per output row —
     the 37× Generate-copy trap in another costume (8.1 s, 2.3× slower).
     The join streams pairs without ever materializing a bucket."""
-    buckets = lsh_buckets(df, id_col, text_col, n, num_perm, bands, flavor,
-                          shingle)
+    return bucket_pairs(
+        lsh_buckets(df, id_col, text_col, n, num_perm, bands, flavor,
+                    shingle),
+        max_bucket)
+
+
+def bucket_pairs(buckets: DataFrame,
+                 max_bucket: int | None = None) -> DataFrame:
+    """Distinct (id_a < id_b) pairs of docs sharing any (band, bucket) of an
+    `lsh_buckets` table — the pair half of `lsh_candidate_pairs`, split out
+    so a caller that already holds a (materialized) bucket table derives
+    its candidates from it instead of recomputing the signatures.
+    `max_bucket` is the skew guard documented on `lsh_candidate_pairs`.
+    Extra columns of `buckets` (e.g. the store's `bp`) are ignored."""
     if max_bucket is not None:
         sizes = buckets.groupBy("band", "bucket").agg(
             F.count("*").alias("__bsz"))
@@ -411,6 +402,11 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     load-bearing lineage cut, see the inline comment). Callers that only
     want to inspect the plan pay that job.
 
+    `id_col` must uniquely key `df`: a candidate id carried by two rows of
+    `df` raises ValueError (the array formulation would otherwise emit one
+    output row per duplicate). The check rides the gram-table stats
+    aggregate the function already collects, so it adds no Spark job.
+
     shingle='char' (default, the oracle-checked config): character n-grams
     as per-doc DISTINCT STRING arrays (no 64-bit hashing — a hash
     collision would change the exact count the DuckDB oracle checks).
@@ -437,12 +433,6 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     bounded by the pipeline's MAX_HTML_BYTES-capped doc sizes."""
     if shingle not in ("char", "word"):
         raise ValueError(f"shingle must be 'char' or 'word', got {shingle!r}")
-    # PRECONDITION (same discipline as dedup_lines_corpus): `id_col` must
-    # uniquely key `df`. The former exploded-gram formulation silently
-    # UNIONED the grams of duplicate-id rows; the array formulation would
-    # instead emit one output row per duplicate — don't feed it dup ids
-    # (every in-repo caller dedups or reads uniquely-keyed tables first).
-    #
     # spread a single-task doc scan before the gram-array build (the
     # same §2.5 guard as the pair side below; no-op for exchange-bearing
     # or well-partitioned inputs)
@@ -539,8 +529,20 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             .cast("long"))
     else:
         elem_bytes = (F.size("__gs") * F.lit(8)).cast("long")
+    # the duplicate-id check shares this job: collect_set merges in the
+    # agg's existing final stage, where count_distinct would add a shuffle
+    # (and an AQE job). Its state is one id per candidate doc — a small
+    # fraction of the gram table the same agg already sums over.
     stats_row = gtab.agg(F.sum(elem_bytes).alias("b"),
-                         F.sum(F.size("__gs")).alias("c")).collect()[0]
+                         F.sum(F.size("__gs")).alias("c"),
+                         F.count("*").alias("rows"),
+                         F.size(F.collect_set("id")).alias("ids")
+                         ).collect()[0]
+    if stats_row["rows"] != stats_row["ids"]:
+        raise ValueError(
+            f"ngram_jaccard_pairs: {stats_row['rows']} rows of `df` carry "
+            f"only {stats_row['ids']} distinct candidate ids — `{id_col}` "
+            "must uniquely key the document table")
     est_bytes = (stats_row["b"] or 0) + 16 * (stats_row["c"] or 0)
     fits = est_bytes <= broadcast_bytes
     ga = gtab.select(F.col("id").alias("id_a"), F.col("__gs").alias("__ga"))
@@ -643,6 +645,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     of every dedup pipeline: LSH/phash emit PAIRS, but dropping duplicates
     needs CLUSTERS (keep one canonical doc per component).
 
+    NOT a lazy plan builder: at CALL time a bounded probe
+    (`limit(driver_edges+1)` collect) executes the `pairs` plan once; when
+    the graph exceeds the bound, the distributed loop executes it again.
+    Pass a materialized (checkpointed) pair table to pay that plan once.
+
     Spark-first: iterative min-label propagation — each round joins the
     (undirected) edge list against current labels and takes the min label
     over {self} ∪ neighbors. Rounds needed = graph diameter; near-dup
@@ -701,13 +708,22 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 # IS the component label (same semantics as the loop)
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        f = pairs.schema[id_a]
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import StructField, StructType
+
+        f = pairs.schema[id_a]
         schema = StructType([StructField("id", f.dataType, f.nullable),
                              StructField("comp", f.dataType, f.nullable)])
-        return spark.createDataFrame(out, schema)
+        at = to_arrow_type(f.dataType)
+        # handed over as an Arrow table, the result is a LocalRelation that
+        # its consumers scan inside their own plans; a Python-list
+        # createDataFrame is a Python-RDD scan instead, which runs Python
+        # workers every time the result is evaluated (~0.5 s on local[4])
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"id": pa.array(list(parent), at),
+                      "comp": pa.array([find(x) for x in parent], at)}),
+            schema)
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -773,6 +789,21 @@ def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame,
     return docs.join(drop, id_col, "left_anti")
 
 
+def _stage_exact(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The exact-dedup staging table both near-dup recipes fan out from:
+    `exact_dedup` survivors (all input columns), repartitioned by id and
+    materialized (see `dedup_corpus`'s docstring for why)."""
+    # REPARTITIONED by id at the session's shuffle-partition width (the
+    # scale knob) — a production staging table bucketed by id. Without it
+    # the checkpoint inherits the byte-coalesced partitioning of the
+    # exact-dedup aggregate (ONE partition at sf0.1 — single-file scan +
+    # AQE byte-based coalescing), and every CPU-heavy consumer (signature
+    # Generate + hashing, the verify gram build) runs single-core (guide
+    # §2.5: under-parallel input → repartition right after it).
+    n_spread = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return exact_dedup(docs, text_col, id_col).drop("content_sha") \
+        .repartition(n_spread, id_col) \
+        .localCheckpoint(eager=True)
 
 
 def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -824,18 +855,7 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
     would otherwise execute four times. On a real cluster use persist
     (DISK) or a staging table at this point.
     """
-    # The materialization is REPARTITIONED by id at the session's
-    # shuffle-partition width (the scale knob) — a production staging
-    # table bucketed by id. Without it the checkpoint inherits the
-    # byte-coalesced partitioning of the exact-dedup aggregate (ONE
-    # partition at sf0.1 — single-file scan + AQE byte-based coalescing),
-    # and every CPU-heavy consumer below (signature Generate + hashing ×2
-    # for the LSH self-join, the verify gram build) runs single-core
-    # (guide §2.5: under-parallel input → repartition right after it).
-    n_spread = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = exact_dedup(docs, text_col, id_col).drop("content_sha") \
-        .repartition(n_spread, id_col) \
-        .localCheckpoint(eager=True)
+    out = _stage_exact(docs, id_col, text_col)
     # materialize the candidate pairs: the verify stage references them
     # four times (pair-id restriction, size prefilter, intersection count,
     # zero-overlap left join) and each reference would otherwise re-run
@@ -871,26 +891,38 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     recomputes signatures over the full corpus every run; a daily increment
     at 100 TB must instead pair new docs against a PERSISTED bucket index:
 
-        1. full `dedup_corpus` recipe WITHIN the increment (exact → LSH →
-           Jaccard verify → components → canonical),
-        2. increment survivors' buckets probe the store — read PRUNED to
-           the batch's bp partitions (the streaming store's layout,
-           streaming/minhash.py: bp = pmod(xxhash64(band,bucket), P));
-           bucket collisions yield (new doc, canonical doc) candidates,
-        3. candidates are VERIFIED with the same-shingle-space Jaccard gate
-           (canonical texts fetched from `canon_dir` by a semi-join on the
-           hit ids only — at warehouse scale an id-bucketed Iceberg table
-           makes this a pruned read),
-        4. admitted docs' (band, bucket, id, bp) rows are appended to the
-           store FIRST, then the docs to `canon_dir` — the crash-safe
+        1. ONE bucket table: the increment is exact-deduped once (the
+           staging step `dedup_corpus` uses) and its (id, band, bucket, bp)
+           table is computed once — the signatures of an admit are never
+           recomputed. Both tables are materialized;
+        2. ONE candidate table from that bucket table: in-batch pairs
+           (`bucket_pairs`: id_a < id_b, `max_bucket`-capped, as in
+           `dedup_corpus`) plus store-probe pairs (new doc, owner id) —
+           the store read PRUNED to the batch's bp partitions (the
+           streaming store's layout, streaming/minhash.py:
+           bp = pmod(xxhash64(band,bucket), P)) — each flagged with its
+           kind;
+        3. ONE Jaccard verify (same shingle space) over the exact
+           survivors plus the canonical texts the probe hit (fetched from
+           `canon_dir` by a semi-join on the hit ids only — at warehouse
+           scale an id-bucketed Iceberg table makes this a pruned read).
+           Connected components run over the verified IN-BATCH pairs
+           only; dropped = every non-minimum member of a component plus
+           every doc with a verified store pair. That is exactly the
+           two-pass result (`dedup_corpus` within the batch, then the
+           store probe over its survivors): the store pass only removes
+           docs, so removing both sets at once admits the same docs;
+        4. admitted docs' (band, bucket, id, bp) rows — rows of the same
+           bucket table — are appended to the store FIRST, then the docs
+           to `canon_dir` — the crash-safe
            order. An ORPHAN bucket row (id absent from canon) is
            semantically inert: a collision with it never verifies (the
            Jaccard stage finds no canonical text, and a pair that cannot
            verify never drops anything), so a crash between the two
-           appends costs nothing — the retried increment collides with
-           its own orphan buckets only as SELF-pairs, which are excluded
-           from verification (id_a == id_b proves a prior attempt by this
-           very doc, not a duplicate), so it is admitted exactly once.
+           appends costs nothing — a store pair whose owner is a doc of
+           this batch can only be an orphan of a prior attempt (batch
+           and canon ids are disjoint, below) and is excluded from
+           verification, so the retried doc is admitted exactly once.
            The REVERSE order is the silent-loss shape: canon rows with no
            index entries would let every future near-duplicate of them
            probe, miss, and be admitted forever. A COMPLETED run is
@@ -898,8 +930,12 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
            in `canon_dir` are anti-joined out of the increment up front
            (same id ⇒ already admitted — the pipeline's manifest-resume
            rule), which also guarantees batch and canonical ids are
-           disjoint so a non-self candidate pair is always a genuine
-           cross-corpus pair.
+           disjoint so a store pair is always a genuine cross-corpus
+           pair.
+
+    Store I/O is sized to the cores: the append repartitions by bp to
+    min(store partitions, defaultParallelism) tasks — still one file per
+    bp per append, without a write task per bp.
 
     The whole run holds the writer lease on the STORE's parent directory
     (plans/lease.py — the same lock the store's maintenance job
@@ -988,7 +1024,10 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
     has_canon = _os.path.isdir(canon_dir) and any(
         f.endswith(".parquet") for f in _os.listdir(canon_dir))
     if has_canon:
-        canon_ids = spark.read.parquet(canon_dir).select(id_col)
+        # one read (one schema-inference job) for the resume anti-join and
+        # the probe's canon texts: the lease keeps canon_dir unchanged
+        canon = spark.read.parquet(canon_dir)
+        canon_ids = canon.select(id_col)
         if stats is not None:
             # measured here, under the lease, against the exact snapshot
             # the anti-join reads — see the docstring's `stats` contract
@@ -998,10 +1037,11 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
     elif stats is not None:
         stats["n_already_admitted"] = 0
 
-    batch = dedup_corpus(increment, id_col=id_col, text_col=text_col,
-                         jaccard_threshold=jaccard_threshold, n=n,
-                         num_perm=num_perm, bands=bands, shingle=shingle,
-                         max_bucket=max_bucket).localCheckpoint(eager=True)
+    # docstring step 1: the exact survivors and their ONE bucket table,
+    # both materialized — every consumer below (in-batch pairs, store
+    # probe, verify texts, appends) reads these instead of re-running the
+    # exact-dedup shuffle or the signature Generate
+    batch = _stage_exact(increment, id_col, text_col)
     buckets = (
         lsh_buckets(batch, id_col, text_col, n, num_perm, bands, "xx",
                     shingle)
@@ -1009,6 +1049,10 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
                                                F.col("bucket"), n_parts))
         .localCheckpoint(eager=True)
     )
+    # step 2: in-batch candidates, flagged __store = false
+    cands = bucket_pairs(buckets, max_bucket) \
+        .withColumn("__store", F.lit(False))
+    texts = batch.select(id_col, text_col)
 
     has_store = _os.path.isdir(store_dir) and any(
         d.startswith("bp=") for d in _os.listdir(store_dir))
@@ -1043,57 +1087,73 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
         # control-plane scalars: at most n_parts ints, never row data
         bps = [r["bp"] for r in buckets.select("bp").distinct().collect()]
         seen = read_store_pruned(spark, store_dir, bps)
-        cands = (
+        probe = (
             buckets.join(seen.select("band", "bucket",
                                      F.col("id").alias("id_b")),
                          ["band", "bucket"])
-            # id_a == id_b can only be an ORPHAN self-collision (batch and
-            # canon ids are disjoint after the resume anti-join): a prior
-            # crashed attempt indexed this doc's buckets but never
-            # published its text — that is this doc's own history, not a
-            # duplicate, so it must not count against admission
-            .where(F.col("id") != F.col("id_b"))
+            # an owner that is a doc of THIS batch is an ORPHAN of a prior
+            # crashed attempt (batch and canon ids are disjoint after the
+            # resume anti-join) — this batch's own history, not a
+            # duplicate. That covers the self-collision id == id_b and an
+            # orphan of another batch doc, whose text IS among the verify
+            # texts below (an orphan owner outside the batch has no text
+            # anywhere and simply never verifies)
+            .join(batch.select(F.col(id_col).alias("id_b")), "id_b",
+                  "left_anti")
             .select(F.col("id").alias("id_a"), "id_b").distinct()
-            # materialized for the same reason as dedup_corpus's cands:
-            # referenced by the canon-text semi-join and four times inside
-            # the verify, each of which would otherwise re-read the store
-            # and re-run the probe join; bounded by the candidate pairs
-            .localCheckpoint(eager=True)
         )
+        cands = cands.unionByName(probe.withColumn("__store", F.lit(True)))
+    # materialized: referenced by the canon-text semi-join, four times
+    # inside the verify and by the flag join below — each would otherwise
+    # re-run the bucket self-join and re-read the store; bounded by the
+    # candidate pairs
+    cands = cands.localCheckpoint(eager=True)
+    if has_store and has_canon:
         canon_hit = (
-            spark.read.parquet(canon_dir)
-            .join(cands.select(F.col("id_b").alias(id_col)).distinct(),
+            canon.join(cands.where(F.col("__store"))
+                  .select(F.col("id_b").alias(id_col)).distinct(),
                   id_col, "left_semi")
             .select(id_col, text_col)
         )
-        texts = batch.select(id_col, text_col).unionByName(canon_hit)
-        # materialized (tiny — dropped ids only): BOTH consumers below
-        # (admitted docs, admitted buckets) reference it, and each
-        # checkpoint would otherwise re-run the whole cross-store verify
-        dropped = (
-            ngram_jaccard_pairs(texts, cands, id_col=id_col,
-                                text_col=text_col, n=n, shingle=shingle,
-                                min_jaccard=jaccard_threshold)
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select(F.col("id_a").alias(id_col)).distinct()
-            .localCheckpoint(eager=True)
-        )
-        admitted = batch.join(dropped, id_col, "left_anti")
-        admitted_buckets = buckets.join(
-            dropped.withColumnRenamed(id_col, "id"), "id", "left_anti")
-    else:
-        admitted, admitted_buckets = batch, buckets
-    # NO eager checkpoint here (r7 — two job barriers removed): the
-    # cache-invalidation hazard the former checkpoints guarded against
-    # (plans read canon_dir / store_dir which the appends below mutate)
-    # cannot occur any more, because every path into `admitted` /
-    # `admitted_buckets` is lineage-cut ABOVE any store/canon read:
-    # `batch` derives from dedup_corpus's checkpointed staging table (the
-    # resume anti-join's canon read is beneath that checkpoint),
-    # `buckets` and `dropped` are checkpointed right where the store
-    # probe / cross-verify results land, and the components table of the
-    # fast path is driver-local. If a future edit re-introduces a
-    # canon/store read below those cuts, restore the checkpoints.
+        texts = texts.unionByName(canon_hit)
+    # step 3: ONE verify over both kinds. Materialized (true pairs only,
+    # tiny): the component probe, the store-drop ids and both appends
+    # reference it, and it is the lineage cut above the canon read
+    verified = (
+        ngram_jaccard_pairs(texts, cands.select("id_a", "id_b"),
+                            id_col=id_col, text_col=text_col, n=n,
+                            shingle=shingle, min_jaccard=jaccard_threshold)
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .join(cands, ["id_a", "id_b"])
+        .select("id_a", "id_b", "__store")
+        .localCheckpoint(eager=True)
+    )
+    # components over the IN-BATCH pairs only: a canon doc in the graph
+    # could become a component minimum and drop a batch doc that
+    # first-seen-greedy admits (its only path to canon runs through a
+    # dropped doc)
+    comp = connected_components(
+        verified.where(~F.col("__store")).select("id_a", "id_b"))
+    # the union adds up both inputs' partitions (the driver-local
+    # components table alone has defaultParallelism); coalesced so the
+    # broadcast of these few ids runs on the cores, not over their sum
+    dropped = (
+        comp.where(F.col("id") != F.col("comp")).select("id")
+        .unionByName(verified.where(F.col("__store"))
+                     .select(F.col("id_a").alias("id")))
+        .coalesce(spark.sparkContext.defaultParallelism)
+    )
+    admitted = batch.join(dropped.withColumnRenamed("id", id_col), id_col,
+                          "left_anti")
+    admitted_buckets = buckets.join(dropped, "id", "left_anti")
+    # NO eager checkpoint here: every path into `admitted` /
+    # `admitted_buckets` is lineage-cut ABOVE any store/canon read (the
+    # appends below mutate both): `batch` and `buckets` are checkpointed
+    # staging tables (the resume anti-join's canon read is beneath them),
+    # `verified` is checkpointed where the store probe / canon texts land,
+    # and the components table of the fast path is driver-local. If a
+    # future edit re-introduces a canon/store read below those cuts,
+    # checkpoint the results before the appends.
     # commit-point validation before publishing (same rule as the
     # pipeline): a stolen-stale lease must abort here, not interleave its
     # appends with the new owner's
@@ -1106,9 +1166,12 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
     # repartition by bp before the partitioned write: a W-partition
     # DataFrame written partitionBy("bp") emits up to W×n_parts files per
     # append (guide §6 small-files — every future pruned read pays the
-    # listing+open cost). Keyed by bp the append writes ≤ n_parts files.
+    # listing+open cost). Keyed by bp, each bp lands in ONE task, so the
+    # append writes ≤ n_parts files at any task count — sized to the
+    # cores rather than one (mostly waiting) task per bp.
+    n_write = min(n_parts, spark.sparkContext.defaultParallelism)
     (admitted_buckets.select("band", "bucket", "id", "bp")
-     .repartition(n_parts, "bp")
+     .repartition(n_write, "bp")
      .write.mode("append").partitionBy("bp").parquet(store_dir))
     admitted.write.mode("append").parquet(canon_dir)
     return admitted

@@ -88,13 +88,15 @@ def atomic_swap(path: str) -> None:
 def compact_table(spark: SparkSession, path: str,
                   dedup_keys: list[str],
                   partition_by: list[str] | None = None,
-                  target_files_per_partition: int = 1,
                   preserve_files: list[str] | None = None,
                   lease_stale_sec: float = 3600.0) -> dict:
     """Rewrite the parquet table at `path` with duplicate rows (by
     `dedup_keys`) collapsed and small append files coalesced — the
     MERGE-maintenance job. Preserves (or re-establishes) the
     `partition_by` layout so downstream partition pruning keeps working.
+    Output: ONE file per partition dir (the rewrite is repartitioned by
+    `partition_by` over defaultParallelism tasks, so each partition value
+    lands in one task), or one file for an unpartitioned table.
     Holds the parent-dir writer lease for the duration (module docstring).
 
     Returns {"rows_before", "rows_after", "files_before", "files_after"}.
@@ -102,14 +104,12 @@ def compact_table(spark: SparkSession, path: str,
     with WriterLease(os.path.dirname(path.rstrip("/")) or ".",
                      lease_stale_sec) as lease:
         return _compact_table_locked(spark, path, dedup_keys, partition_by,
-                                     target_files_per_partition,
                                      preserve_files, lease)
 
 
 def _compact_table_locked(spark: SparkSession, path: str,
                           dedup_keys: list[str],
                           partition_by: list[str] | None = None,
-                          target_files_per_partition: int = 1,
                           preserve_files: list[str] | None = None,
                           lease: WriterLease | None = None) -> dict:
     recover_store(path)
@@ -120,16 +120,14 @@ def _compact_table_locked(spark: SparkSession, path: str,
     rows_before = df.count()
     compacted = df.dropDuplicates(dedup_keys)
     if partition_by:
-        # one output file per partition dir (small dimension stores); at
-        # real scale tune target_files_per_partition to executor-sized files
+        # one output file per partition dir: keyed by `partition_by`, every
+        # partition value lands in ONE task whatever the task count, so
+        # the rewrite runs on the cores (no sizing job, no task per value)
         compacted = compacted.repartition(
-            target_files_per_partition * max(
-                1, compacted.select(*partition_by).distinct().count()),
-            *partition_by)
+            spark.sparkContext.defaultParallelism, *partition_by)
         writer = compacted.write.mode("overwrite").partitionBy(*partition_by)
     else:
-        writer = compacted.coalesce(target_files_per_partition) \
-            .write.mode("overwrite")
+        writer = compacted.coalesce(1).write.mode("overwrite")
     # the tmp write is an ACTION that completes before any rename below —
     # the source read and the swap never overlap
     writer.parquet(_tmp(path))

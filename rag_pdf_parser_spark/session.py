@@ -45,6 +45,12 @@ def get_spark(master: str | None = None, app: str = "rag_pdf_parser_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # list a table's partition dirs on the driver: above the threshold
+        # (default 32 paths) Spark lists them in a job with one task per
+        # dir — 64 tasks for every read of a 64-bp LSH store — and in a
+        # local[N] session that job adds scheduling, not parallelism
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
         .config("spark.sql.warehouse.dir", "/tmp/rpps-warehouse")
     )
     spark = builder.getOrCreate()

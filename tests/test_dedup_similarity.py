@@ -1532,3 +1532,158 @@ def test_incremental_refuses_lost_canon(spark, tmp_path):
         "doc_id string, text string")
     with pytest.raises(ValueError, match="lost or mispointed"):
         dedup_corpus_incremental(B, store, canon)
+
+
+def _window_texts(shifts, length=100):
+    """One `length`-word window of a fixed random word sequence per shift.
+    Windows `s` words apart share (length-s)/(length+s) of their words:
+    9 words apart are char-5 near-dups (J ≈ 0.83), 18 apart are not."""
+    import hashlib
+
+    words = [hashlib.sha256(f"w{i}".encode()).hexdigest()[:6]
+             for i in range(length + max(shifts))]
+    return [" ".join(words[s:s + length]) for s in shifts]
+
+
+def _char_jaccard(a, b):
+    from rag_pdf_parser_spark.kernel.twins import char_shingles
+
+    sa, sb = char_shingles(a, 5), char_shingles(b, 5)
+    return len(sa & sb) / len(sa | sb)
+
+
+def test_incremental_components_exclude_canon(spark, tmp_path):
+    """The one-pass admit runs connected components over the VERIFIED
+    IN-BATCH pairs only; store pairs drop their batch doc directly.
+    Expected sets are written out from the first-seen-greedy rule:
+    `dedup_corpus` within the batch, then a store probe of its survivors."""
+    from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
+
+    t0, t9, t18 = _window_texts([0, 9, 18])
+    assert _char_jaccard(t0, t9) >= 0.8 and _char_jaccard(t9, t18) >= 0.8
+    assert _char_jaccard(t0, t18) < 0.8
+
+    def admit(where, canon_rows, inc_rows):
+        store, canon = str(where / "idx"), str(where / "canon")
+        schema = "doc_id string, text string"
+        dedup_corpus_incremental(spark.createDataFrame(canon_rows, schema),
+                                 store, canon)
+        return sorted(r["doc_id"] for r in dedup_corpus_incremental(
+            spark.createDataFrame(inc_rows, schema), store, canon).collect())
+
+    # case 1: canon C < X < Y; in the batch X ~ Y, and only Y ~ C. Greedy:
+    # the batch keeps X (its component minimum) and drops Y; X has no
+    # canon near-dup, so X is admitted. A component over a graph holding
+    # C (C–Y–X, minimum C) would drop X too.
+    assert admit(tmp_path / "one", [("a_c", t0)],
+                 [("b_x", t18), ("c_y", t9)]) == ["b_x"]
+    # case 2: the batch's canonical doc X matches canon C: the store pair
+    # drops X, the component drops Y — nothing is admitted
+    assert admit(tmp_path / "two", [("a_c", t0)],
+                 [("b_x", t9), ("c_y", t18)]) == []
+
+
+def test_incremental_admit_stages_sized_to_cores(spark, tmp_path):
+    """Store I/O sized to the cores: an admit into a store that already
+    has all its bp directories runs no stage wider than defaultParallelism
+    (no write task per bp, no per-directory listing job), and its append
+    still writes at most one file per bp; so does the compaction."""
+    import hashlib
+    import os
+
+    from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
+    from rag_pdf_parser_spark.plans.maintenance import compact_batch_lsh_store
+    from rag_pdf_parser_spark.streaming.minhash import STORE_PARTITIONS
+
+    def doc(i):
+        return " ".join(hashlib.sha256(f"{i}-{j}".encode()).hexdigest()[:7]
+                        for j in range(40))
+
+    schema = "doc_id string, text string"
+    store, canon = str(tmp_path / "idx"), str(tmp_path / "canon")
+    dedup_corpus_incremental(spark.createDataFrame(
+        [(f"a{i:03d}", doc(i)) for i in range(100)], schema), store, canon)
+
+    def files():
+        return {d: {f for f in os.listdir(os.path.join(store, d))
+                    if f.endswith(".parquet")}
+                for d in os.listdir(store) if d.startswith("bp=")}
+
+    before = files()
+    assert len(before) == STORE_PARTITIONS  # precondition: every bp dir
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def widest_stage(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        assert jobs, group
+        return max(tracker.getStageInfo(s).numTasks
+                   for j in jobs for s in tracker.getJobInfo(j).stageIds
+                   if tracker.getStageInfo(s) is not None)
+
+    # 30 fresh docs, a near-dup of a canon doc (a store drop) and an
+    # in-batch near-dup pair (a component drop), so every path runs
+    inc = spark.createDataFrame(
+        [(f"b{i:03d}", doc(1000 + i)) for i in range(30)]
+        + [("c0", doc(5) + " tail"), ("c1", doc(2000)),
+           ("c2", doc(2000) + " tail")], schema)
+    admitted = []
+    assert widest_stage("sized-admit", lambda: admitted.extend(
+        dedup_corpus_incremental(inc, store, canon).collect())) \
+        <= sc.defaultParallelism
+    assert sorted(r["doc_id"] for r in admitted) == \
+        [f"b{i:03d}" for i in range(30)] + ["c1"]
+    after = files()
+    new = {d: after[d] - before.get(d, set()) for d in after}
+    assert all(len(f) <= 1 for f in new.values()), new
+    assert 0 < sum(len(f) for f in new.values()) <= STORE_PARTITIONS
+
+    res = {}
+    assert widest_stage("sized-compact", lambda: res.update(
+        compact_batch_lsh_store(spark, store))) <= sc.defaultParallelism
+    assert res["files_after"] == STORE_PARTITIONS
+    assert all(len(f) == 1 for f in files().values())
+
+
+def test_jaccard_rejects_duplicate_candidate_ids(spark):
+    """`id_col` must uniquely key the doc table: a candidate id carried by
+    two rows raises instead of multiplying the pair's output rows. A
+    duplicate id that is in no candidate pair never reaches the verify."""
+    docs = spark.createDataFrame(
+        [("a", "some words of text here"), ("a", "other words entirely"),
+         ("b", "some words of text here"), ("c", "x"), ("c", "y")],
+        "doc_id string, text string")
+    pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
+    with pytest.raises(ValueError, match="uniquely key"):
+        ngram_jaccard_pairs(docs, pairs)
+    with pytest.raises(ValueError, match="uniquely key"):
+        ngram_jaccard_pairs(docs, spark.createDataFrame(
+            [("b", "c")], "id_a string, id_b string"))
+    # "c" stays duplicated but is in no pair
+    one_a = docs.where(F.col("text") != "other words entirely")
+    got = ngram_jaccard_pairs(one_a, pairs).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in got] == \
+        [("a", "b", 1.0)]
+
+
+def test_bucket_pairs_matches_lsh_candidate_pairs(spark, docs_df):
+    """`lsh_candidate_pairs` = `bucket_pairs` over `lsh_buckets`, with and
+    without the bucket-size cap."""
+    from rag_pdf_parser_spark.operators.dedup import bucket_pairs, lsh_buckets
+
+    buckets = lsh_buckets(docs_df, bands=4, num_perm=8)
+    got = {}
+    for cap in (None, 3):
+        got[cap] = {tuple(r) for r in bucket_pairs(buckets, cap).collect()}
+        want = {tuple(r) for r in lsh_candidate_pairs(
+            docs_df, bands=4, num_perm=8, max_bucket=cap).collect()}
+        assert got[cap] == want, cap
+    # the cap bites: the exact triplet's buckets hold more than 3 docs
+    assert got[3] < got[None]
