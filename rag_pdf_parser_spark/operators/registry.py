@@ -1,25 +1,23 @@
 """Parser registry — the engine's analog of the reference's
 BaseDocumentParser extension point (base_parser.py:17-88; SURVEY §2.9):
 a mapping of content kinds to pure-Python kernels with a COMMON output
-schema, dispatched per row inside one mapInPandas stage.
+schema, dispatched per row inside the one `mapInArrow` extraction stage
+(`operators/extract.py`).
 
-Adding a source kind = registering one kernel function; every downstream
-operator (explode, enrichments, chunking, dedup, sinks) is unchanged.
+Adding a source kind = registering one kernel function and its byte-sniff
+rule; every downstream operator (explode, enrichments, chunking, dedup,
+sinks) is unchanged.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..kernel.htmlx import extract_document
 from ..kernel.pdfx import extract_pdf_document
-from ..schema import DOCS_SCHEMA
-
-_DOC_COLS = [f.name for f in DOCS_SCHEMA.fields]
+from .extract import _extract_stage
 
 KERNELS: dict[str, Callable[[bytes], dict]] = {
     "html": extract_document,
@@ -27,35 +25,12 @@ KERNELS: dict[str, Callable[[bytes], dict]] = {
 }
 
 
-def _sniff(raw: bytes) -> str:
-    return "pdf" if raw[:4] == b"%PDF" else "html"
+def _sniffed_kernel(raw: bytes) -> dict:
+    return KERNELS["pdf" if raw[:4] == b"%PDF" else "html"](raw)
 
 
-def extract_dispatch(pages: DataFrame, content_type_col: str | None = None,
-                     partitions: int | None = None) -> DataFrame:
-    """pages(url, html[, content_type]) → docs, kernel chosen per row by the
-    `content_type` column or by byte-sniffing. Same salted-repartition scale
-    shape as extract_docs."""
-    has_ct = content_type_col is not None
-    cols = ["url", "html"] + ([content_type_col] if has_ct else [])
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            cts = pdf[content_type_col].tolist() if has_ct else None
-            for i, (url, html) in enumerate(
-                    zip(pdf["url"].tolist(), pdf["html"].tolist())):
-                raw = bytes(html) if html is not None else b""
-                kind = (cts[i] if has_ct and cts[i] in KERNELS
-                        else _sniff(raw))
-                d = KERNELS[kind](raw)
-                rows.append((url, d["doc_id"], d["charset"],
-                             d["failure_code"], d["title"], d["authors"],
-                             d["parser_version"], d["n_pages"],
-                             d["extracted_text"], len(raw), d["blocks"]))
-            yield pd.DataFrame(rows, columns=_DOC_COLS)
-
-    n = partitions or 3 * int(
-        pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    src = pages.select(*cols).repartition(n, F.xxhash64("url"))
-    return src.mapInPandas(run, DOCS_SCHEMA)
+def extract_dispatch(pages: DataFrame, partitions: int | None = None) -> DataFrame:
+    """pages(url, html) → docs, kernel chosen per row by byte-sniffing
+    (`%PDF` → PDF, else HTML). Same salted-repartition scale shape as
+    extract_docs."""
+    return _extract_stage(pages, _sniffed_kernel, False, partitions, salt=True)

@@ -5,7 +5,7 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
     pages scan → resume anti-join (vs manifest)           [J3, persistent.py doc_status]
               → dedup anti-join (vs seen_hashes)          [F7/J2, main.py:43-46]
               → salted repartition by xxhash64(url)       [north_rule skew defusal]
-              → mapInPandas extraction (kernel)           [M1/M2 fused]
+              → mapInArrow extraction (kernel)            [M1/M2 fused]
               → docs + exploded blocks + chunks           [S3/W1/W6]
               → parquet sinks + manifest append           [K1-K4, K7]
 

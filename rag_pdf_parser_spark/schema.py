@@ -107,7 +107,7 @@ CHUNKS_SCHEMA = T.StructType(
 # Chunk as a nested struct (for the fused extract+chunk stage).
 CHUNK_STRUCT = T.StructType([f for f in CHUNKS_SCHEMA.fields if f.name != "doc_id"])
 
-# Fused extraction output: blocks AND chunks nested — one mapInPandas pass,
+# Fused extraction output: blocks AND chunks nested — one mapInArrow pass,
 # zero extra shuffle for chunking (per-doc sequential work stays per-doc).
 DOCS_FULL_SCHEMA = T.StructType(
     DOCS_SCHEMA.fields + [T.StructField("chunks", T.ArrayType(CHUNK_STRUCT), False)]

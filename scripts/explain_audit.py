@@ -34,6 +34,20 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def plan_nodes(df) -> list[str]:
+    """Node names of the executed physical plan, walked through
+    nodeName()/children() (into the adaptive root's current plan)."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        if names[-1] == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
 def main() -> None:
     spark = get_spark("local[4]", shuffle_partitions=4)
     sections: list[tuple[str, str, list[str]]] = []
@@ -75,6 +89,19 @@ def main() -> None:
     ))
     assert p.count("MapInArrow (") == 1, "extraction must be ONE Python stage"
     assert p.count("MapInPandas (") == 0, "extraction is mapInArrow now (r7)"
+
+    # 4b. mixed HTML/PDF dispatch: the same one Arrow stage, kernel per row
+    from rag_pdf_parser_spark.operators.registry import extract_dispatch
+
+    dispatch = extract_dispatch(pages)
+    sections.append((
+        "mixed HTML/PDF dispatch: the same single Arrow-native Python stage",
+        plan_of(dispatch),
+        ["MapInArrow", "hashpartitioning(xxhash64(url"],
+    ))
+    nodes = plan_nodes(dispatch)
+    assert nodes.count("MapInArrow") == 1, f"dispatch: ONE Arrow stage, {nodes}"
+    assert "MapInPandas" not in nodes, f"dispatch: no pandas stage, {nodes}"
 
     # 5. simhash: fingerprint pass must be shuffle-free (VERDICT r1 #1)
     from rag_pdf_parser_spark.operators.dedup import simhash

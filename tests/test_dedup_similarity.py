@@ -15,7 +15,6 @@ from rag_pdf_parser_spark.operators.dedup import (
 from rag_pdf_parser_spark.operators.similarity import (
     ann_topk,
     brute_force_topk,
-    brute_force_topk_numpy,
 )
 
 BASE = (
@@ -206,15 +205,6 @@ def test_brute_force_topk_matches_numpy(spark, vecs_df):
             key=lambda t: (-t[0], t[1]),
         )
         assert have == [(s, i) for s, i in order]
-
-
-def test_numpy_variant_matches_expression_variant(spark, vecs_df):
-    queries = vecs_df.where(F.col("vec_id") < 2)
-    a = {(r["query_id"], r["cand_id"]) for r in brute_force_topk(vecs_df, queries, k=3).collect()}
-    qpdf = queries.toPandas()
-    b = {(r["query_id"], r["cand_id"])
-         for r in brute_force_topk_numpy(vecs_df, qpdf, k=3).collect()}
-    assert a == b
 
 
 def test_ann_recall_against_brute_force(spark, vecs_df):

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from rag_pdf_parser_spark.kernel.pdfx import extract_pdf_document, make_pdf
 from rag_pdf_parser_spark.operators.registry import extract_dispatch
-from rag_pdf_parser_spark.schema import PAGES_SCHEMA
+from rag_pdf_parser_spark.schema import DOCS_SCHEMA, PAGES_SCHEMA
 
 
 class TestPdfKernel:
@@ -58,25 +58,28 @@ class TestPdfKernel:
 
 def test_dispatch_mixed_corpus(spark):
     """One table mixing HTML and PDF rows → one dispatch stage, per-row
-    kernel selection (byte-sniffed), identical to per-kernel goldens."""
+    kernel selection (byte-sniffed): every DOCS_SCHEMA column of every row,
+    nested blocks included, equals the chosen kernel's dict. NULL and empty
+    html both read as b"" and take the HTML kernel."""
     from rag_pdf_parser_spark.datagen import make_pages
     from rag_pdf_parser_spark.kernel import extract_document
 
     html_pages = make_pages(30)
-    rows = [(p["url"], None, p["html"], "", "en") for p in html_pages]
-    rows += [(f"pdf://doc/{i}", None, make_pdf(i), "", "en") for i in range(30)]
+    raws = {p["url"]: p["html"] for p in html_pages}
+    raws.update({f"pdf://doc/{i}": make_pdf(i) for i in range(30)})
+    raws["null://html"] = None
+    raws["empty://html"] = b""
+    rows = [(url, None, raw, "", "en") for url, raw in raws.items()]
     pdf_df = pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
     pages = spark.createDataFrame(pdf_df, schema=PAGES_SCHEMA)
 
-    out = {r["url"]: r for r in extract_dispatch(pages).collect()}
-    assert len(out) == 60
-    for p in html_pages:
-        g = extract_document(p["html"])
-        assert out[p["url"]]["extracted_text"] == g["extracted_text"]
-        assert out[p["url"]]["doc_id"] == g["doc_id"]
-    for i in range(30):
-        g = extract_pdf_document(make_pdf(i))
-        r = out[f"pdf://doc/{i}"]
-        assert r["extracted_text"] == g["extracted_text"]
-        assert r["charset"] == "binary"
-        assert len(r["blocks"]) == len(g["blocks"])
+    got = extract_dispatch(pages).collect()
+    out = {r["url"]: r.asDict(recursive=True) for r in got}
+    assert len(got) == len(raws) == 62 and set(out) == set(raws)
+    for url, raw in raws.items():
+        raw = raw or b""
+        kernel = extract_pdf_document if url.startswith("pdf://") else extract_document
+        assert list(out[url]) == DOCS_SCHEMA.names, url
+        assert out[url] == {**kernel(raw), "url": url, "bytes_in": len(raw)}, url
+    assert out["pdf://doc/0"]["charset"] == "binary"
+    assert out["null://html"]["failure_code"] == "EMPTY_HTML"

@@ -195,6 +195,33 @@ def test_salt_false_skips_shuffle(spark, pages_df):
     assert unsalted.exceptAll(full).count() == 0
 
 
+def _plan_node_names(df) -> list[str]:
+    """Node names of the executed physical plan, walked through
+    `nodeName()`/`children()` (stepping into the adaptive root's current
+    plan) instead of searching the plan text."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        if names[-1] == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_extraction_plans_one_arrow_stage(spark, pages_df):
+    """HTML-only, fused and mixed HTML/PDF extraction all plan exactly one
+    MapInArrow node and no MapInPandas node."""
+    from rag_pdf_parser_spark.operators.extract import extract_docs_full
+    from rag_pdf_parser_spark.operators.registry import extract_dispatch
+
+    for op in (extract_docs, extract_docs_full, extract_dispatch):
+        names = _plan_node_names(op(pages_df))
+        assert names.count("MapInArrow") == 1, (op.__name__, names)
+        assert "MapInPandas" not in names, (op.__name__, names)
+
+
 def test_render_markdown_doc(spark, pages_df, golden_docs):
     """K1 sink: markdown doc per doc_id with page separators
     (writer.py:80-87 shape)."""
@@ -217,21 +244,6 @@ def test_render_markdown_doc(spark, pages_df, golden_docs):
             pos = nxt
         if g["n_pages"] > 1:
             assert "<!-- Page 2 -->" in md
-
-
-def test_sorted_chunker_equals_grouped_map(spark, pages_df):
-    """The batch-amortized mapInPandas chunker must produce exactly the
-    grouped-map chunker's rows."""
-    from rag_pdf_parser_spark.operators.chunking import chunk_documents_sorted
-
-    blocks = explode_blocks(extract_docs(pages_df))
-    a = chunk_documents(blocks).select("chunk_id", "doc_id", "text",
-                                       "token_count", "section", "block_ids")
-    b = chunk_documents_sorted(blocks).select("chunk_id", "doc_id", "text",
-                                              "token_count", "section",
-                                              "block_ids")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 def test_nested_lines_arrow_roundtrip(spark, pages_df, golden_docs):
